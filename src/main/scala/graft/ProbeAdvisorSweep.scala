@@ -6,8 +6,7 @@ import org.apache.spark.sql.functions._
   * 17-query q* suite to LayoutAdvisor as its corpus, stage exactly what
   * it advises, redirect the engine's table resolution at the staged
   * layouts (Tables.redirect — zero query changes), and run all 17 over
-  * them. This replaces the per-shape hand-staged probes (ProbeBucketedJoin,
-  * ProbeCustLayout) with the product path a user would actually run:
+  * them: the product path a user would actually run,
   * advise(corpus) → stage → query.
   *
   * Staging is one-time: a fresh JVM re-ATTACHES the already-written
@@ -20,8 +19,7 @@ import org.apache.spark.sql.functions._
   * Prints one BenchBig-shaped JSON line; `flat` runs the identical
   * suite without redirects (the A/B control in the same harness);
   * `check` runs every query BOTH ways and asserts row-identical
-  * results (the rel suite is integer-exact by construction, so exact
-  * equality is the contract, not a tolerance).
+  * results ([[checkAdvised]]).
   */
 object ProbeAdvisorSweep {
 
@@ -33,22 +31,9 @@ object ProbeAdvisorSweep {
     val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
 
     if (mode == "check") {
-      val redirects = ensureAdvised(spark, d)
-      def rows(n: String): Seq[String] =
-        SparkEntry.queries(n)(spark, d).collect().map(_.toString).sorted.toSeq
-      var bad = 0
-      names.foreach { n =>
-        redirects.foreach { case (t, ct) => Tables.redirect(d, t, ct) }
-        val layout = rows(n)
-        Tables.clearRedirects()
-        val flat = rows(n)
-        val ok = layout == flat
-        if (!ok) bad += 1
-        println(s"[check] $n: ${if (ok) "IDENTICAL" else s"MISMATCH (${layout.size} vs ${flat.size} rows)"}")
-      }
-      println(s"""{"metric":"advisor_check","bad":$bad,"n":${names.size}}""")
-      spark.stop()
-      if (bad > 0) sys.exit(1)
+      val (_, checks) = checkAdvised(spark, d, names)
+      checks.foreach(c => println(s"[check] ${c.query}: ${c.verdict}"))
+      finishCheck(spark, checks)
       return
     }
     if (mode == "explain") {
@@ -65,25 +50,18 @@ object ProbeAdvisorSweep {
     }
     if (mode == "routedcheck") {
       val staged = ensureProjections(spark, d)
-      def rows(n: String): Seq[String] =
-        SparkEntry.queries(n)(spark, d).collect().map(_.toString).sorted.toSeq
-      var bad = 0
-      names.foreach { n =>
+      val checks = names.map { n =>
         Tables.clearRedirects()
         val routes = graft.plans.LayoutAdvisor.routeAll(
           SparkEntry.queries(n)(spark, d), staged)
         routes.foreach { case (t, ct) => Tables.redirect(d, t, ct) }
-        val routed = rows(n)
+        val routed = rows(spark, d, n)
         Tables.clearRedirects()
-        val flat = rows(n)
-        val ok = routed == flat
-        if (!ok) bad += 1
-        println(s"[check] $n -> ${routes.values.mkString(",")}: " +
-          s"${if (ok) "IDENTICAL" else s"MISMATCH (${routed.size} vs ${flat.size} rows)"}")
+        val c = RowCheck(n, routed, rows(spark, d, n))
+        println(s"[check] $n -> ${routes.values.mkString(",")}: ${c.verdict}")
+        c
       }
-      println(s"""{"metric":"advisor_check","bad":$bad,"n":${names.size}}""")
-      spark.stop()
-      if (bad > 0) sys.exit(1)
+      finishCheck(spark, checks)
       return
     }
     if (mode == "denormexplain") {
@@ -104,28 +82,23 @@ object ProbeAdvisorSweep {
       val staged = ensureProjections(spark, d)
       val metas = ensureDenorm(spark, d) // registered process-wide
       val rollups = ensureRollups(spark, d)
-      def rows(n: String): Seq[String] =
-        SparkEntry.queries(n)(spark, d).collect().map(_.toString).sorted.toSeq
-      var bad = 0
-      names.foreach { n =>
+      val checks = names.map { n =>
         Tables.clearRedirects()
         val routes = denormAwareRoutes(spark, d, n, staged, metas, rollups)
         routes.foreach { case (t, ct) => Tables.redirect(d, t, ct) }
-        val served = rows(n)
+        val served = rows(spark, d, n)
         Tables.clearRedirects()
         metas.foreach(m => graft.plans.MaterializedJoins.deregister(m.catalogTable))
         rollups.foreach(m => graft.plans.MaterializedAggs.deregister(m.catalogTable))
-        val flat = try rows(n) finally {
+        val flat = try rows(spark, d, n) finally {
           metas.foreach(graft.plans.MaterializedJoins.register)
           rollups.foreach(graft.plans.MaterializedAggs.register)
         }
-        val ok = served == flat
-        if (!ok) bad += 1
-        println(s"[check] $n: ${if (ok) "IDENTICAL" else s"MISMATCH (${served.size} vs ${flat.size} rows)"}")
+        val c = RowCheck(n, served, flat)
+        println(s"[check] $n: ${c.verdict}")
+        c
       }
-      println(s"""{"metric":"advisor_check","bad":$bad,"n":${names.size}}""")
-      spark.stop()
-      if (bad > 0) sys.exit(1)
+      finishCheck(spark, checks)
       return
     }
     if (mode == "rollupab") {
@@ -221,13 +194,57 @@ object ProbeAdvisorSweep {
     spark.stop()
   }
 
+  /** One query's rows on staged layouts (`served`) against flat tables. */
+  private[graft] case class RowCheck(query: String, servedRows: Int,
+      flatRows: Int, identical: Boolean) {
+    def verdict: String =
+      if (identical) "IDENTICAL" else s"MISMATCH ($servedRows vs $flatRows rows)"
+  }
+
+  private object RowCheck {
+    def apply(query: String, served: Seq[String], flat: Seq[String]): RowCheck =
+      RowCheck(query, served.size, flat.size, served == flat)
+  }
+
+  /** Query `n`'s result rows as sorted strings: the rel suite is
+    * integer-exact by construction, so exact equality is the contract,
+    * not a tolerance. */
+  private def rows(spark: org.apache.spark.sql.SparkSession, d: String,
+      n: String): Seq[String] =
+    SparkEntry.queries(n)(spark, d).collect().map(_.toString).sorted.toSeq
+
+  /** Print the check summary line, stop the session, exit 1 on any
+    * mismatch. */
+  private def finishCheck(spark: org.apache.spark.sql.SparkSession,
+      checks: Seq[RowCheck]): Unit = {
+    val bad = checks.count(!_.identical)
+    println(s"""{"metric":"advisor_check","bad":$bad,"n":${checks.size}}""")
+    spark.stop()
+    if (bad > 0) sys.exit(1)
+  }
+
+  /** The `check` mode: advise and stage over the corpus
+    * ([[ensureAdvised]]), then run each of `names` with the advised
+    * redirects installed and on the flat tables. Returns the redirects
+    * and one [[RowCheck]] per query; leaves no redirect installed. */
+  private[graft] def checkAdvised(spark: org.apache.spark.sql.SparkSession,
+      d: String, names: Seq[String]): (Seq[(String, String)], Seq[RowCheck]) = {
+    val redirects = try ensureAdvised(spark, d) finally Tables.clearRedirects()
+    val checks = names.map { n =>
+      redirects.foreach { case (t, ct) => Tables.redirect(d, t, ct) }
+      val layout = try rows(spark, d, n) finally Tables.clearRedirects()
+      RowCheck(n, layout, rows(spark, d, n))
+    }
+    (redirects, checks)
+  }
+
   /** This query's redirects under the denorm+routing composition: the
     * registry is live, so the plan ALREADY shows which tables the
     * materialized join absorbed — route only what still reads flat.
     * Member tables of a FIRED meta are excluded from routing entirely
     * (their remaining flat reads, e.g. q21's self-join branches, must
     * keep the base path the meta records). */
-  def denormAwareRoutes(spark: org.apache.spark.sql.SparkSession, d: String,
+  private[graft] def denormAwareRoutes(spark: org.apache.spark.sql.SparkSession, d: String,
       n: String, staged: Seq[graft.plans.LayoutAdvisor.Projection],
       metas: Seq[graft.plans.MaterializedJoins.Meta],
       rollups: Seq[graft.plans.MaterializedAggs.Meta] = Nil): Map[String, String] = {
@@ -252,7 +269,7 @@ object ProbeAdvisorSweep {
     * stays live — this is the product mode where
     * [[graft.plans.RewriteMaterializedJoin]] serves every query whose
     * join subtree the staged star subsumes. */
-  def ensureDenorm(spark: org.apache.spark.sql.SparkSession, d: String)
+  private[graft] def ensureDenorm(spark: org.apache.spark.sql.SparkSession, d: String)
       : Seq[graft.plans.MaterializedJoins.Meta] = {
     Tables.clearRedirects()
     val corpus = BenchBig.Rel.map(n => SparkEntry.queries(n)(spark, d))
@@ -301,7 +318,7 @@ object ProbeAdvisorSweep {
     * grain). minHits=1: a rollup write is one aggregate over the fact
     * — the same work ONE covered query pays per run — so even a
     * single-query key amortizes immediately. */
-  def ensureRollups(spark: org.apache.spark.sql.SparkSession, d: String)
+  private[graft] def ensureRollups(spark: org.apache.spark.sql.SparkSession, d: String)
       : Seq[graft.plans.MaterializedAggs.Meta] = {
     Tables.clearRedirects()
     val corpus = BenchBig.Rel.map(n => SparkEntry.queries(n)(spark, d))
@@ -346,7 +363,7 @@ object ProbeAdvisorSweep {
     * the local harness, the same per-task sizing rule a cluster run
     * would apply with a bigger constant. minHits=2: a single-query key
     * does not pay for a whole-table rewrite. */
-  def ensureAdvised(spark: org.apache.spark.sql.SparkSession, d: String)
+  private[graft] def ensureAdvised(spark: org.apache.spark.sql.SparkSession, d: String)
       : Seq[(String, String)] = {
     Tables.clearRedirects()
     val corpus = BenchBig.Rel.map(n => SparkEntry.queries(n)(spark, d))
@@ -453,7 +470,7 @@ object ProbeAdvisorSweep {
     * decode-constant class q6/q14/q15 never reached its proven
     * shipdate-clustered cents answer). No redirects installed here:
     * routing is per-query by construction. */
-  def ensureProjections(spark: org.apache.spark.sql.SparkSession, d: String)
+  private[graft] def ensureProjections(spark: org.apache.spark.sql.SparkSession, d: String)
       : Seq[graft.plans.LayoutAdvisor.Projection] = {
     Tables.clearRedirects()
     val corpus = BenchBig.Rel.map(n => SparkEntry.queries(n)(spark, d))

@@ -45,6 +45,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object TableStats {
 
+  /** HLL++ at rsd 0.05 estimates a true PK within ±5%, so 0.9 clears
+    * real keys and never triggers below 0.86× true distinctness. */
+  val UniqueishFactor = 0.9
+
   /** Measured statistics for one table identity. `fingerprint` = the
     * [[Freshness]] fingerprint of the files the measurement ran over
     * (None for pre-round-12 records and multi-leaf frames). Consumers
@@ -55,12 +59,10 @@ object TableStats {
     * vice versa). Re-[[analyze]] restores measurement. */
   case class Stats(key: String, rowCount: Long, ndv: Map[String, Long],
       fingerprint: Option[String] = None) {
-    /** True when `col` was measured ≈unique: NDV ≥ factor × rowCount.
-      * HLL++ at rsd 0.05 estimates a true PK within ±5%, so the 0.9
-      * default clears real keys and never triggers below 0.86× true
-      * distinctness. */
-    def uniqueish(col: String, factor: Double = 0.9): Boolean =
-      ndv.get(col).exists(n => rowCount > 0 && n.toDouble >= factor * rowCount)
+    /** True when `col` was measured ≈unique: NDV ≥ [[UniqueishFactor]]
+      * × rowCount. */
+    def uniqueish(col: String): Boolean =
+      ndv.get(col).exists(n => rowCount > 0 && n.toDouble >= UniqueishFactor * rowCount)
 
     /** Measured equality selectivity 1/NDV, None when unmeasured. */
     def selectivityEq(col: String): Option[Double] =

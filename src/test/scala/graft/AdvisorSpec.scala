@@ -666,4 +666,35 @@ class AdvisorSpec extends GraftSpec {
       spark.sql("DROP TABLE IF EXISTS adv_fresh_b")
     }
   }
+
+  test("ProbeAdvisorSweep.checkAdvised: all 17 rel queries return identical rows on advised layouts and flat tables") {
+    import java.nio.file.Files
+    // a private copy of sf0.001: staging persists TableStats for the
+    // base paths in the shared warehouse, and measured stats change the
+    // EagerAggregation and advisor decisions other specs assert on `sf`
+    val d = Files.createTempDirectory("adv_check")
+    new java.io.File(sf).listFiles().foreach(f => Files.copy(f.toPath, d.resolve(f.getName)))
+    val tag = d.toString.replaceAll("[^A-Za-z0-9]", "_")
+    val wh = graft.plans.TableStats.warehouseOf(spark)
+    try {
+      val (redirects, checks) =
+        ProbeAdvisorSweep.checkAdvised(spark, d.toString, BenchBig.Rel)
+      assert(redirects.nonEmpty, "no staged layout: the check would compare flat with flat")
+      assert(checks.map(_.query) === BenchBig.Rel && checks.size === 17)
+      val bad = checks.filterNot(_.identical)
+      assert(bad.isEmpty, bad.map(c => s"${c.query}: ${c.verdict}").mkString("; "))
+    } finally {
+      Tables.clearRedirects()
+      spark.catalog.listTables().collect().map(_.name).filter(_.endsWith(tag))
+        .foreach(t => spark.sql(s"DROP TABLE `$t`"))
+      new java.io.File(wh).listFiles().filter(_.getName.endsWith(tag))
+        .foreach(f => GateFixtures.deleteRecursively(f.toPath))
+      // the copy's stats records: base paths and staged-table aliases
+      new java.io.File(wh, "_graft_stats").listFiles().filter { f =>
+        val key = Files.readAllLines(f.toPath).get(0)
+        key.contains(d.toString) || key.endsWith(tag)
+      }.foreach(f => Files.delete(f.toPath))
+      GateFixtures.deleteRecursively(d)
+    }
+  }
 }
