@@ -122,6 +122,14 @@ object GraftSession {
     }
 
   def local(cores: String = "4", shufflePartitions: Option[Int] = None): SparkSession = {
+    val s = builder(cores, shufflePartitions).getOrCreate()
+    s.sparkContext.setLogLevel("WARN")
+    s
+  }
+
+  /** The builder [[local]] starts, before `getOrCreate` — lets a test
+    * harness add a static conf (its own warehouse) on top. */
+  private[graft] def builder(cores: String, shufflePartitions: Option[Int]): SparkSession.Builder = {
     val b = configure(
       SparkSession.builder()
         .master(s"local[$cores]")
@@ -134,12 +142,9 @@ object GraftSession {
             if (cores.forall(_.isDigit) && cores.nonEmpty) cores
             else Runtime.getRuntime.availableProcessors().toString)))
     // ad-hoc conf overrides for experiments: SPARK_GRAFT_CONF="k=v;k=v"
-    val withOverrides = sys.env.get("SPARK_GRAFT_CONF").toSeq
+    sys.env.get("SPARK_GRAFT_CONF").toSeq
       .flatMap(_.split(";")).map(_.split("=", 2))
       .collect { case Array(k, v) => (k, v) }
       .foldLeft(b) { case (bb, (k, v)) => bb.config(k, v) }
-    val s = withOverrides.getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
   }
 }

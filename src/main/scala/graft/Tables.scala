@@ -57,7 +57,7 @@ object Tables {
     // the flat path hands TimestampType (both transforms below are
     // no-ops on already-normalized schemas)
     val raw = if (redirected != null) spark.table(redirected)
-      else spark.read.parquet(s"$sfDir/$name.parquet")
+      else graft.sources.ParquetSchemas.read(spark, Seq(s"$sfDir/$name.parquet"))
     // TIMESTAMP(NANOS) columns arrive as long nanos (nanosAsLong); convert
     // to TimestampType at µs precision — identical to DuckDB's ns→µs
     // truncation, keeping oracle parity. `div` (integer division —

@@ -26,8 +26,9 @@ import org.apache.spark.sql.functions._
   * ride the task closure the way FAISS replicates them to every worker;
   * assignment is a NARROW map (k codegen'd kernel calls per row,
   * least-of-structs argmin — no join, no shuffle); each Lloyd iteration
-  * is one partial-aggregated shuffle of k*dim groups. The driver only
-  * ever holds centroids, never data.
+  * is one shuffle-free job whose tasks return per-cell sums and counts
+  * ([[Lloyd.means]]). The driver only ever holds centroids and those
+  * k*dim partials per task, never data.
   */
 object Ivf {
 
@@ -68,9 +69,11 @@ object Ivf {
     * Init = the k vectors with the smallest ids (deterministic, seedless);
     * update = per-dim floor(sum/count) (sums of quantized longs stay far
     * below 2^53, so the double division is exact); empty cells keep
-    * their previous centroid. Each iteration runs one distributed
-    * assign+aggregate job and collects exactly k centroid rows — the
-    * driver never sees data, only the model. */
+    * their previous centroid. The init is one job and each iteration
+    * one more: assign by [[nearestCentroid]] and fold per-cell sums in
+    * the same shuffle-free pass ([[Lloyd.means]]), so `kmeans(q, k,
+    * iters)` runs at most `1 + iters` jobs — the driver never sees data,
+    * only the model. */
   def kmeans(q: DataFrame, k: Int, iters: Int): Centroids = {
     require(k > 0 && iters >= 0, s"kmeans: need k > 0 and iters >= 0, got k=$k iters=$iters")
     val init: Centroids = q.select(col("id"), col("qv")).orderBy(col("id")).limit(k)
@@ -78,15 +81,8 @@ object Ivf {
       .map { case (r, i) => (i, r.getSeq[Long](1).toArray) }.toSeq
     require(init.nonEmpty, "kmeans: empty corpus — no vectors to train on")
     (1 to iters).foldLeft(init) { (cents, _) =>
-      val assigned = q.select(nearestCentroid(col("qv"), cents).as("cid"),
-        posexplode(col("qv")).as(Seq("pos", "x")))
-      val updated = assigned.groupBy(col("cid"), col("pos"))
-        .agg(floor(sum(col("x")).cast("double") / count(lit(1))).cast("long").as("elem"))
-        .groupBy(col("cid"))
-        .agg(transform(array_sort(collect_list(struct(col("pos"), col("elem")))),
-          _.getField("elem")).as("cent"))
-        .collect().map(r => r.getLong(0).toInt -> r.getSeq[Long](1).toArray).toMap
-      cents.map { case (cid, c) => (cid, updated.getOrElse(cid, c)) }
+      val updated = Lloyd.means(q.select(nearestCentroid(col("qv"), cents), col("qv")))
+      cents.map { case (cid, c) => (cid, updated.getOrElse(cid.toLong, c)) }
     }
   }
 

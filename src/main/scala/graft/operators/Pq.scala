@@ -30,13 +30,13 @@ import org.apache.spark.sql.functions._
   * deterministically: distance asc, then neighbor id asc).
   *
   * Scale design: codebooks are m·ksub·(d/m) = d·ksub longs — plan
-  * literals, never a join. Training runs ONE distributed
-  * assign+aggregate job per Lloyd sweep covering ALL m subspaces (the
-  * exchange carries m·ksub·(d/m) groups); encoding is a NARROW map
-  * (m argmin kernels per row, no shuffle); the ADC scan reads m longs
-  * per neighbor — at 100 TB the code table is ~d·4/m× smaller than the
-  * raw embeddings, which is the entire point. The driver only ever
-  * holds codebooks, never data.
+  * literals, never a join. Training runs ONE shuffle-free job per
+  * Lloyd sweep covering ALL m subspaces (each task returns per-cell
+  * sums and counts, m·ksub·(d/m) pairs — [[Lloyd.means]]); encoding
+  * is a NARROW map (m argmin kernels per row, no shuffle); the ADC
+  * scan reads m longs per neighbor — at 100 TB the code table is
+  * ~d·4/m× smaller than the raw embeddings, which is the entire point.
+  * The driver only ever holds codebooks, never data.
   */
 object Pq {
 
@@ -71,8 +71,10 @@ object Pq {
     * seedless — the [[Ivf.kmeans]] rule applied per sub); update =
     * per-dim floor(sum/count); empty cells keep their centroid. ALL m
     * subspaces train in the same distributed jobs: one window pass for
-    * init, then one assign+aggregate per sweep — the driver collects
-    * m·ksub·dsub longs per sweep, never data. */
+    * init, then one shuffle-free job per sweep that assigns each
+    * subvector by [[nearestCode]] and folds per-(sub, cid) sums and
+    * counts ([[Lloyd.means]]) — the driver merges m·ksub·dsub partials
+    * per task, never data. */
   def train(sq: DataFrame, m: Int, ksub: Int, iters: Int): Codebooks = {
     require(m > 0 && ksub > 0 && iters >= 0,
       s"pq train: need m > 0, ksub > 0, iters >= 0, got m=$m ksub=$ksub iters=$iters")
@@ -87,17 +89,11 @@ object Pq {
     require(books.size == m && books.values.forall(_.size == ksub),
       s"pq train: corpus has fewer than ksub=$ksub vectors (or a subspace is missing)")
     for (_ <- 1 to iters) {
-      val asg = sq.select(col("sub"), nearestCode(col("sub"), col("sv"), books).as("cid"),
-        posexplode(col("sv")).as(Seq("pos", "x")))
-      val updated = asg.groupBy(col("sub"), col("cid"), col("pos"))
-        .agg(floor(sum(col("x")).cast("double") / count(lit(1))).cast("long").as("elem"))
-        .groupBy(col("sub"), col("cid"))
-        .agg(transform(array_sort(collect_list(struct(col("pos"), col("elem")))),
-          _.getField("elem")).as("cent"))
-        .collect()
-        .map(r => (r.getInt(0), r.getLong(1).toInt) -> r.getSeq[Long](2).toArray).toMap
+      // cell = sub·ksub + cid: one id per (subspace, code)
+      val updated = Lloyd.means(sq.select(
+        col("sub").cast("long") * ksub + nearestCode(col("sub"), col("sv"), books), col("sv")))
       books = books.map { case (s, cents) =>
-        s -> cents.map { case (cid, c) => (cid, updated.getOrElse((s, cid), c)) }
+        s -> cents.map { case (cid, c) => (cid, updated.getOrElse(s.toLong * ksub + cid, c)) }
       }
     }
     books

@@ -225,7 +225,7 @@ object MaterializedAggs {
     val saved = spark.conf.getOption(Flag)
     spark.conf.set(Flag, "false")
     try {
-      val fact = spark.read.parquet(spec.factPath.split(',').toIndexedSeq: _*)
+      val fact = graft.sources.ParquetSchemas.read(spark, spec.factPath.split(',').toIndexedSeq)
       val inventory = Freshness.entriesOfPath(spark, spec.factPath)
       val fp = Freshness.ofEntries(inventory)
       val aggs = spec.measures.map(m => expr(m.agg).as(m.name))

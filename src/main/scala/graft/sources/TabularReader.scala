@@ -116,13 +116,18 @@ object TabularReader {
         s"(parquet or orc); format '$format' does not support row-range scans")
     require(!opts.mergeSchema || format == "parquet" || format == "orc",
       s"mergeSchema reconciles file footers; format '$format' has none")
-    val reader = spark.read
-      .format(format)
-      .options(extraOptions)
-      .option("ignoreCorruptFiles", opts.skipCorrupted.toString)
-    if (opts.mergeSchema) reader.option("mergeSchema", "true")
-    userSchema.foreach(reader.schema)
-    val loaded = reader.load(paths: _*)
+    val readOptions = extraOptions + ("ignoreCorruptFiles" -> opts.skipCorrupted.toString) ++
+      (if (opts.mergeSchema) Some("mergeSchema" -> "true") else None)
+    // a plain parquet open infers its footer schema once per file set
+    // (ParquetSchemas); a merging read reconciles every footer each time
+    val loaded =
+      if (format == "parquet" && userSchema.isEmpty && !opts.mergeSchema)
+        ParquetSchemas.read(spark, paths, readOptions)
+      else {
+        val reader = spark.read.format(format).options(readOptions)
+        userSchema.foreach(reader.schema)
+        reader.load(paths: _*)
+      }
 
     // row-range scan: filter on the scan's per-file row position. For
     // parquet this is a narrow post-scan predicate over the generated

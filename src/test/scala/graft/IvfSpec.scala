@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Ann, Ivf}
+import graft.operators.{Ann, Ivf, Lloyd}
 import org.apache.spark.sql.functions._
 
 /** IVF coarse quantizer + int8 compression properties. */
@@ -67,6 +67,51 @@ class IvfSpec extends GraftSpec {
           cosine(col("a.vec"), col("b.vec")) >= tau, "left_anti")
     assert(unwitnessed.count() === 0L)
     assert(dropped.count() > 0L) // the sf corpus has semantic near-dups
+  }
+
+  test("Lloyd sweep equals the SQL sweep on the sf embeddings, in one job per sweep") {
+    val q = Ivf.quantized(emb, col("id"), col("vec"), 1000.0)
+    val (cents, jobs) = jobsDuring(Ivf.kmeans(q, k = 4, iters = 3))
+    assert(jobs <= 1 + 3, s"kmeans(k=4, iters=3) ran $jobs jobs")
+    assert(LloydReference.plain(cents) ===
+      LloydReference.plain(LloydReference.kmeans(q, k = 4, iters = 3)))
+    val assigned = q.select(Ivf.nearestCentroid(col("qv"), cents), col("qv"))
+    assert(Lloyd.means(assigned).map { case (c, v) => c -> v.toSeq } ===
+      LloydReference.means(assigned))
+  }
+
+  test("Lloyd sweep equals the SQL sweep on ragged, negative and empty cells") {
+    import spark.implicits._
+    val rows = Seq[(Long, Seq[Long])](
+      (0L, Seq(-3L, 5L, -7L)), (0L, Seq(-4L, 2L)), // floor(-3.5) = -4, floor(3.5) = 3
+      (1L, Seq(-1L)), (1L, Seq(2L, -9L, 4L, 1L)), (1L, Seq(-2L, -8L)),
+      (2L, Seq.empty), // only empty vectors: no position, no centroid
+      (3L, null)) // a null vector adds nothing
+    val assigned = rows.toDF("cell", "vec").repartition(3)
+    val got = Lloyd.means(assigned).map { case (c, v) => c -> v.toSeq }
+    assert(got === LloydReference.means(assigned))
+    assert(got === Map(0L -> Seq(-4L, 3L, -7L), 1L -> Seq(-1L, -9L, 4L, 1L)))
+    // k-means over duplicate init vectors: cell 1 ties with cell 0 on
+    // every vector, attracts none, and keeps its initial centroid
+    val q = Seq[(Long, Seq[Long])]((0L, Seq(0L, 0L)), (1L, Seq(0L, 0L)),
+        (2L, Seq(-5L, -7L)), (3L, Seq(-6L, -8L)), (4L, Seq(9L, -1L)))
+      .toDF("id", "qv").repartition(2)
+    val cents = Ivf.kmeans(q, k = 3, iters = 3)
+    assert(LloydReference.plain(cents) ===
+      LloydReference.plain(LloydReference.kmeans(q, k = 3, iters = 3)))
+    assert(cents(1)._2.toSeq === Seq(0L, 0L))
+  }
+
+  test("Lloyd sweep fails on a long overflow like ANSI sum") {
+    import spark.implicits._
+    val assigned = Seq[(Long, Seq[Long])]((0L, Seq(Long.MaxValue)), (0L, Seq(1L)))
+      .toDF("cell", "vec").coalesce(1)
+    def overflowed(e: Throwable): Boolean =
+      Iterator.iterate(e)(_.getCause).takeWhile(_ != null).exists(_.isInstanceOf[ArithmeticException])
+    val e = intercept[Exception](Lloyd.means(assigned))
+    assert(overflowed(e), e)
+    val ref = intercept[Exception](LloydReference.means(assigned))
+    assert(overflowed(ref), ref)
   }
 
   test("empty model / degenerate k fail fast with clear messages") {

@@ -26,6 +26,16 @@ class PqSpec extends GraftSpec {
     }
   }
 
+  test("Lloyd sweep trains the same codebooks as the SQL sweep") {
+    val sq = Pq.subQuantized(emb, col("id"), col("vec"), m, dsub, scale)
+    val got = Pq.train(sq, m, ksub, iters = 3)
+    val ref = LloydReference.train(sq, ksub, iters = 3)
+    assert(got.keySet === ref.keySet)
+    got.foreach { case (s, cents) =>
+      assert(LloydReference.plain(cents) === LloydReference.plain(ref(s)), s"subspace $s")
+    }
+  }
+
   test("encoding is narrow (no exchange), total (every vector), and in-range") {
     val sq = Pq.subQuantized(emb, col("id"), col("vec"), m, dsub, scale)
     val books = Pq.train(sq, m, ksub, iters)

@@ -1,7 +1,7 @@
 package graft
 
 import graft.schema.SchemaValidator
-import graft.sources.TabularReader
+import graft.sources.{ParquetSchemas, TabularReader}
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
@@ -59,6 +59,88 @@ class SourcesSpec extends GraftSpec {
     // survives (a row-level coalesce would silently rewrite it)
     assert(out.toSeq === Seq(
       (1L, 10L, Some(-1.0)), (2L, 20L, Some(5.0)), (3L, 30L, None)))
+  }
+
+  test("parquet schema memo: a second Tables.lineitem starts no Spark job") {
+    val first = Tables.lineitem(spark, sf)
+    val (second, jobs) = jobsDuring(Tables.lineitem(spark, sf))
+    assert(jobs === 0)
+    assert(second.schema === first.schema)
+  }
+
+  test("parquet schema memo: overwriting a path with other columns returns the new schema") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_memo").toString + "/t"
+    Seq((1L, "a")).toDF("id", "s").write.parquet(dir)
+    assert(TabularReader.fromParquet(spark, Seq(dir)).columns.toSeq === Seq("id", "s"))
+    val (again, jobs) = jobsDuring(TabularReader.fromParquet(spark, Seq(dir)))
+    assert(jobs === 0 && again.columns.toSeq === Seq("id", "s"))
+    Seq((2L, 3.0, true)).toDF("id", "x", "b").write.mode("overwrite").parquet(dir)
+    val back = TabularReader.fromParquet(spark, Seq(dir))
+    assert(back.schema === spark.read.parquet(dir).schema)
+    assert(back.columns.toSeq === Seq("id", "x", "b"))
+    assert(back.as[(Long, Double, Boolean)].collect().toSeq === Seq((2L, 3.0, true)))
+  }
+
+  test("parquet schema memo: toggling nanosAsLong re-infers ts") {
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupWriteSupport}
+    import org.apache.parquet.hadoop.util.HadoopOutputFile
+    import org.apache.parquet.schema.{LogicalTypeAnnotation, Types}
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.INT64
+    import org.apache.spark.sql.types.{LongType, TimestampType}
+    // a copy of events' (event_id, ts) with ts stored as TIMESTAMP(NANOS),
+    // the layout nanosAsLong exists for (Spark cannot write it)
+    val dir = Files.createTempDirectory("graft_memo_nanos").toString
+    val schema = Types.buildMessage()
+      .optional(INT64).named("event_id")
+      .optional(INT64).as(LogicalTypeAnnotation.timestampType(false,
+        LogicalTypeAnnotation.TimeUnit.NANOS)).named("ts")
+      .named("events")
+    val conf = new org.apache.hadoop.conf.Configuration()
+    GroupWriteSupport.setSchema(schema, conf)
+    val writer = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(
+      new Path(s"$dir/events.parquet"), conf)).withConf(conf).withType(schema).build()
+    val events = Tables.events(spark, sf).select(col("event_id"), unix_micros(col("ts")))
+      .collect()
+    val groups = new SimpleGroupFactory(schema)
+    try events.foreach(r => writer.write(groups.newGroup()
+      .append("event_id", r.getLong(0)).append("ts", r.getLong(1) * 1000L)))
+    finally writer.close()
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    assert(spark.conf.get(key) === "true")
+    val path = Seq(s"$dir/events.parquet")
+    assert(ParquetSchemas.read(spark, path).schema("ts").dataType === LongType)
+    assert(Tables.events(spark, dir).schema("ts").dataType === TimestampType)
+    try {
+      spark.conf.set(key, "false")
+      // re-inferred, so it fails exactly like an uncached read does,
+      // instead of serving the memoized long column
+      def root(t: Throwable): Throwable =
+        Iterator.iterate(t)(_.getCause).takeWhile(_ != null).toSeq.last
+      val plain = root(intercept[Exception](spark.read.parquet(path: _*)))
+      val memo = root(intercept[Exception](ParquetSchemas.read(spark, path)))
+      assert(memo.getClass === plain.getClass && memo.getMessage === plain.getMessage)
+      assert(plain.getMessage.contains("NANOS"), plain)
+    } finally spark.conf.set(key, "true")
+    assert(ParquetSchemas.read(spark, path).schema("ts").dataType === LongType)
+    assert(Tables.events(spark, dir).select(unix_micros(col("ts"))).collect().map(_.getLong(0))
+      .toSeq === events.map(_.getLong(1)).toSeq)
+  }
+
+  test("parquet schema memo: a mergeSchema read still reconciles every footer") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_memo_merge").toString
+    Seq((1L, 10L)).toDF("id", "a").write.parquet(dir + "/v1")
+    Seq((2L, 20L, 5.0)).toDF("id", "a", "v").write.parquet(dir + "/v2")
+    val paths = Seq(dir + "/v1", dir + "/v2")
+    val single = TabularReader.fromParquet(spark, paths)
+    assert(single.schema === spark.read.parquet(paths: _*).schema)
+    val merged = TabularReader.fromParquet(spark, paths, TabularReader.Options(mergeSchema = true))
+    assert(merged.columns.toSeq === Seq("id", "a", "v"))
+    assert(merged.orderBy("id").collect().map(r => r.isNullAt(2)).toSeq === Seq(true, false))
+    assert(TabularReader.fromParquet(spark, paths).schema === single.schema)
   }
 
   test("mergeSchema evolution works for ORC too (footer branch parity)") {
